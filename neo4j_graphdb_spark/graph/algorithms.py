@@ -55,16 +55,16 @@ def pagerank(
 
     Superstep count is ADAPTIVE, capped at ``max_iter``. Two exits:
 
-    * exact stationarity (always on): the same checksum-fold as
-      connected_components — if an iteration reproduces the previous
-      ranks BIT-EXACTLY (xxhash64 bit_xor fold), every further
-      iteration would too (the update is a deterministic function of
-      the ranks), so stopping is provably value-identical to the full
-      ``max_iter`` unroll and the unrolled-CTE oracles stay valid.
-      Checked every 4th superstep (exiting up to 3 supersteps past the
-      fixpoint is value-identical by the same stationarity argument);
-      the checksum action is the only job barrier in the loop, so the
-      cadence makes one job cover four supersteps.
+    * exact stationarity (always on): if a superstep reproduces the
+      previous ranks BIT-EXACTLY (``max |rank − prev| == 0.0`` over
+      that one superstep), every further superstep would too (the
+      update is a deterministic function of the ranks), so stopping is
+      provably value-identical to the full ``max_iter`` unroll and the
+      unrolled-CTE oracles stay valid. Checked every 4th superstep
+      (exiting up to 3 supersteps past the fixpoint is value-identical
+      by the same stationarity argument); the check's aggregate is the
+      only job barrier in the loop, so the cadence makes one job cover
+      four supersteps.
     * ``tol`` (opt-in, default off): additionally stop when
       ``max |Δrank| < tol`` — the practical production exit at scale
       (L∞ residual, the standard PageRank stopping rule). This is an

@@ -93,6 +93,15 @@ def get_spark(app_name: str = "neo4j_graphdb_spark", *, cpus: int | None = None)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame call-site capture: when on, every Column
+        # operation (F.col, comparisons, aliases) makes ~5 extra Py4J
+        # round trips to record the Python call site for error messages.
+        # Plan building in the superstep loops and the Cypher compiler is
+        # Column-heavy: twenty chained withColumn(when/otherwise) steps
+        # took 1,705 round trips with it and 440 without. PySpark reads
+        # it once per process, at the first Column operation under an
+        # active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # In LOCAL mode the driver JVM is also every executor: the heap
         # serves all `cpus` concurrent tasks. 8g across 32 tasks was
         # 256 MB/task — far below guide-§5 sizing — and GC time landed

@@ -33,6 +33,19 @@ over as hardlinks — the manifest discipline of a Delta/Iceberg
 upgrade is swapping the hardlink carry-over for real manifest entries;
 the join and pruning logic below is exactly what those formats execute
 under the hood.
+
+The bucket count is per label (per rel_type on edges) and sized from
+the data: the smallest power of two ``n`` with the label's bytes on
+disk / ``n`` ≤ ``spark.sql.files.maxPartitionBytes``, so one bucket is
+at most one scan split. A label's first write gets ``n = 1`` (one leaf
+file, nothing to prune); the count only grows, and the write that finds
+a label over its target rewrites the whole label at the doubled count —
+linear hashing (Litwin, VLDB 1980) on hive directories, amortized O(1)
+rewrite per row. Each version records its counts as ``{value: n}`` in
+``v{N}/_layout.json`` (written before the pointer swap, so time travel,
+vacuum and crash recovery see the counts their files were hashed with;
+Spark's reader skips ``_``-prefixed files). A version without the
+record predates it and hashed every value into 16 buckets.
 """
 
 from __future__ import annotations
@@ -42,18 +55,17 @@ import os
 import urllib.parse
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from neo4j_graphdb_spark.model import NODE_ID, as_edges, as_nodes, node_id_expr
 
-# Sub-label file pruning: each label/rel_type partition is further
-# hash-bucketed on the merge key, so a MERGE batch rewrites only the
-# buckets its keys land in — O(touched buckets), not O(label). 16 keeps
-# local test stores from fragmenting; a 100 TB deployment raises it
-# (e.g. 1024) so one bucket ≈ one comfortable rewrite unit.
-N_KEY_BUCKETS = int(os.environ.get("SPARK_GRAFT_MERGE_BUCKETS", "16"))
 BUCKET_COL = "_kb"
+LAYOUT_FILE = "_layout.json"
+# bucket count of every label/rel_type in a version written before
+# layout records existed (the fixed count every store used then)
+LEGACY_BUCKETS = 16
 
 
 def _observed_counters(obs: Observation, names: list[str]) -> dict:
@@ -71,26 +83,88 @@ def _observed_counters(obs: Observation, names: list[str]) -> dict:
     metric is the exact answer, not an approximation."""
     try:
         return obs.get
-    except Exception as ex:
+    except Py4JJavaError as ex:
         # The absent-metrics-row failure surfaces as a Py4JJavaError
-        # wrapping the JVM-side `java.lang.AssertionError` raised inside
-        # PythonSQLUtils.toPyRow (observed signature on PySpark 4.1.2,
-        # pinned by the two anchored-write goldens) — the one case where
-        # all-zero counters ARE the exact answer. Any OTHER failure
+        # whose JVM cause chain holds the `java.lang.AssertionError`
+        # raised inside PythonSQLUtils.toPyRow — the one case where
+        # all-zero counters ARE the exact answer. Matching the JVM
+        # exception class, not message text, keeps this working across
+        # PySpark releases that reword messages. Any OTHER failure
         # (py4j transport error, listener race) is a real metrics
         # problem on a possibly non-empty write: propagate instead of
-        # silently reporting nodes_created=0 (ADVICE r16).
-        msg = str(ex)
-        if "toPyRow" in msg and "AssertionError" in msg:
+        # silently reporting nodes_created=0.
+        if _jvm_cause_named(ex, "java.lang.AssertionError"):
             return {n: 0 for n in names}
         raise
 
 
-def _bucket_of(*cols) -> "F.Column":
-    """Deterministic key→bucket assignment (same expression at write and
+def _jvm_cause_named(ex: Py4JJavaError, class_name: str) -> bool:
+    """True iff the JVM exception ``ex`` wraps, or any exception in its
+    cause chain, is of class ``class_name``."""
+    jex = ex.java_exception
+    seen = 0
+    while jex is not None and seen < 16:  # bounded: a chain may loop
+        if jex.getClass().getName() == class_name:
+            return True
+        jex = jex.getCause()
+        seen += 1
+    return False
+
+
+def _hash_bucket(n: int, *cols) -> "F.Column":
+    """Bucket of a key among ``n`` buckets. Same expression at write and
     at prune time, so an existing row for key K is always found in
-    bucket _bucket_of(K))."""
-    return F.pmod(F.xxhash64(*cols), F.lit(N_KEY_BUCKETS)).cast("int")
+    bucket ``_hash_bucket(n, K)`` of its label's current count ``n``."""
+    if n == 1:
+        return F.lit(0)
+    return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
+
+
+def _bucket_of(layout: dict[str, int], pcol: str, *cols) -> "F.Column":
+    """Key→bucket for a frame holding rows of several labels (nodes,
+    ``pcol="label"``) or rel_types (edges, ``pcol="rel_type"``): a CASE
+    on ``pcol`` over :func:`_hash_bucket` with each value's count from
+    ``layout``. Values absent from ``layout`` have one bucket."""
+    by_n: dict[int, list[str]] = {}
+    for value, n in layout.items():
+        if n > 1:
+            by_n.setdefault(n, []).append(value)
+    out = None
+    for n, values in sorted(by_n.items()):
+        cond = F.col(pcol).isin(sorted(values))
+        b = _hash_bucket(n, *cols)
+        out = F.when(cond, b) if out is None else out.when(cond, b)
+    return F.lit(0) if out is None else out.otherwise(F.lit(0))
+
+
+def _buckets_for(nbytes: int, max_bytes: int) -> int:
+    """Smallest power of two ``n`` with ``nbytes / n <= max_bytes``."""
+    n = 1
+    while nbytes > n * max_bytes:
+        n *= 2
+    return n
+
+
+def _value_dirs(path: str | None, pcol: str) -> dict[str, str]:
+    """``{value: dir}`` of the ``pcol=value`` partition dirs of a version."""
+    if path is None or not os.path.isdir(path):
+        return {}
+    prefix = f"{pcol}="
+    return {
+        urllib.parse.unquote(e[len(prefix):]): os.path.join(path, e)
+        for e in os.listdir(path)
+        if e.startswith(prefix)
+    }
+
+
+def _tree_bytes(path: str) -> int:
+    """Bytes of the parquet files under ``path``."""
+    return sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
 
 
 @dataclass
@@ -179,6 +253,16 @@ class _VersionedTable:
             )
         return spark.read.option("mergeSchema", "true").parquet(path)
 
+    def layout(self, version: int | None = None) -> dict[str, int] | None:
+        """The ``{value: bucket count}`` record of a version (default: the
+        current one), or None for a version written without one."""
+        v = self.current_version() if version is None else version
+        try:
+            with open(os.path.join(self.root, f"v{v}", LAYOUT_FILE)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
     def list_versions(self) -> list[int]:
         return sorted(
             int(e[1:])
@@ -207,7 +291,12 @@ class _VersionedTable:
             gone.append(v)
         return gone
 
-    def write_next(self, df: DataFrame, partition_by: str | list[str] | None = None) -> str:
+    def write_next(
+        self,
+        df: DataFrame,
+        partition_by: str | list[str] | None = None,
+        layout: dict[str, int] | None = None,
+    ) -> str:
         v = self.current_version() + 1
         path = os.path.join(self.root, f"v{v}")
         if partition_by is not None:
@@ -221,18 +310,26 @@ class _VersionedTable:
             # shuffle task fans out one file per leaf dir it sees
             # (tasks × buckets small files per merge — the classic small-
             # files problem, and most of the merge wall-clock on many-core
-            # local runs). One task per leaf writes one file; oversized
-            # leaves split via spark.sql.files.maxRecordsPerFile, and the
-            # bucket count (writer.N_KEY_BUCKETS) is the real lever at
-            # cluster scale.
+            # local runs). One task per leaf writes one file; the graph
+            # store sizes its per-label bucket counts so that a leaf stays
+            # within one scan split (see _Rewrite).
             df = df.repartition(*[F.col(c) for c in cols])
             w = df.write.mode("overwrite").partitionBy(*cols)
         else:
             w = df.write.mode("overwrite")
         w.parquet(path)
+        self._write_layout(path, layout)
         self._swap_pointer(v)
         self._schema, self._schema_version = df.schema, v
         return path
+
+    @staticmethod
+    def _write_layout(path: str, layout: dict[str, int] | None) -> None:
+        """Record the version's bucket counts next to its files — before
+        the pointer swap publishes it."""
+        if layout is not None:
+            with open(os.path.join(path, LAYOUT_FILE), "w") as f:
+                json.dump(layout, f, sort_keys=True)
 
     def _swap_pointer(self, v: int) -> None:
         """Atomically advance ``_CURRENT`` (write temp + rename): a crash
@@ -277,6 +374,7 @@ class _VersionedTable:
         df: DataFrame,
         partition_by: str | list[str],
         touched_values: list,
+        layout: dict[str, int] | None = None,
     ) -> str:
         """Write ``df`` (rows of the *touched* partitions only) as the next
         version and carry every untouched partition over from the current
@@ -284,7 +382,9 @@ class _VersionedTable:
 
         ``partition_by`` may be a single column or a chain (e.g.
         ``["label", "_kb"]``); ``touched_values`` is then a list of values
-        or of tuples naming the touched leaf partitions. This bounds MERGE
+        or of tuples naming the touched partitions — a full leaf, or a
+        prefix such as ``(label,)`` that covers every leaf below it (a
+        label rewritten whole at a new bucket count). This bounds MERGE
         write amplification to O(touched leaves), not O(table) — the same
         file-reuse discipline Delta/Iceberg implement with manifests; on a
         shared filesystem the hardlink becomes a manifest entry referencing
@@ -318,15 +418,15 @@ class _VersionedTable:
             }
 
             def _carry(src: str, dst: str, depth: int, crumbs: tuple) -> None:
-                """Hardlink every leaf partition dir not in ``touched``;
+                """Hardlink every partition dir not covered by ``touched``;
                 descend only into levels that contain touched leaves."""
-                if depth == len(cols):
-                    return  # fully-touched leaf: freshly written, no carry
                 prefix = f"{cols[depth]}="
                 for e in os.listdir(src):
                     if not e.startswith(prefix):
                         continue
                     val = crumbs + (e[len(prefix):],)
+                    if val in touched:
+                        continue  # rewritten whole: freshly written, no carry
                     if not any(t[: depth + 1] == val for t in touched):
                         # nothing below here was touched: link whole subtree
                         _hardlink_tree(os.path.join(src, e), os.path.join(dst, e))
@@ -334,6 +434,7 @@ class _VersionedTable:
                         _carry(os.path.join(src, e), os.path.join(dst, e), depth + 1, val)
 
             _carry(prev, path, 0, ())
+        self._write_layout(path, layout)
         self._swap_pointer(v)
         # new version's schema = this write's columns plus any carried
         # partition's extra property columns (known iff the previous
@@ -352,6 +453,99 @@ class _VersionedTable:
         else:
             self._schema, self._schema_version = None, -2
         return path
+
+
+def _max_partition_bytes(spark: SparkSession) -> int:
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def _table_layout(spark, vt, pcol: str, bucketed: bool) -> dict[str, int]:
+    """Bucket counts of the current version's values. A bucketed version
+    without a layout record predates the records: every value has
+    LEGACY_BUCKETS. A version without key buckets is about to be
+    rewritten whole, so each value is sized from its bytes now (and a
+    value without its own dir gets one bucket)."""
+    dirs = _value_dirs(vt.current_path(), pcol)
+    if bucketed:
+        rec = vt.layout()
+        return rec if rec is not None else {v: LEGACY_BUCKETS for v in dirs}
+    max_bytes = _max_partition_bytes(spark)
+    return {v: _buckets_for(_tree_bytes(d), max_bytes) for v, d in dirs.items()}
+
+
+class _Rewrite:
+    """How one write lays out the rows of one label (nodes) or rel_type
+    (edges) in the next version.
+
+    ``n`` is the value's bucket count there: its current count, raised
+    (for writes that add rows, ``grow=True``) to the size rule's count
+    for the value's bytes on disk now. ``whole`` is True when the count
+    grew: the write then rewrites every row of the value instead of only
+    the buckets its keys land in. ``bucketed`` is False when the current
+    version predates key buckets (or the store is empty): the write then
+    rewrites the whole table, which also upgrades its layout. ``layout``
+    is the record the next version carries."""
+
+    def __init__(self, spark, vt, pcol, value, key_cols, existing, grow):
+        self.vt, self.pcol, self.value, self.key_cols = vt, pcol, value, key_cols
+        self.bucketed = (
+            existing is not None
+            and vt.is_partitioned_by([pcol, BUCKET_COL])
+            and BUCKET_COL in existing.columns
+        )
+        layout = (
+            _table_layout(spark, vt, pcol, self.bucketed)
+            if existing is not None
+            else {}
+        )
+        n_old = layout.get(value, 1)
+        self.n = n_old
+        if grow and self.bucketed:
+            d = _value_dirs(vt.current_path(), pcol).get(value)
+            if d is not None:
+                self.n = max(
+                    n_old, _buckets_for(_tree_bytes(d), _max_partition_bytes(spark))
+                )
+        self.whole = self.bucketed and self.n != n_old
+        self.layout = {**layout, value: self.n}
+
+    def bucket(self) -> "F.Column":
+        """Bucket of one of this value's rows in the next version."""
+        return _hash_bucket(self.n, *[F.col(c) for c in self.key_cols])
+
+    def touched(self, existing: DataFrame, buckets: list[int]) -> DataFrame:
+        """The current rows the write replaces: this value's rows in
+        ``buckets`` (all of them when the count grew)."""
+        rows = existing.filter(F.col(self.pcol) == self.value)
+        if self.bucketed and not self.whole:
+            rows = rows.filter(F.col(BUCKET_COL).isin(buckets))
+        return rows
+
+    def write(
+        self, rows: DataFrame, existing: DataFrame | None, buckets: list[int]
+    ) -> None:
+        """Publish ``rows`` — the new content of :meth:`touched` — as the
+        next version; every other leaf carries over."""
+        rows = rows.withColumn(BUCKET_COL, self.bucket())
+        cols = [self.pcol, BUCKET_COL]
+        if self.bucketed:
+            touched = (
+                [(self.value,)]
+                if self.whole
+                else [(self.value, b) for b in buckets]
+            )
+            self.vt.write_next_partial(rows, cols, touched, layout=self.layout)
+            return
+        if existing is not None:
+            # legacy layout (unpartitioned, or without key buckets): a
+            # partial rewrite would silently drop data — one full rewrite
+            # that upgrades the table to the bucketed layout
+            others = existing.filter(F.col(self.pcol) != self.value).withColumn(
+                BUCKET_COL,
+                _bucket_of(self.layout, self.pcol, *[F.col(c) for c in self.key_cols]),
+            )
+            rows = others.unionByName(rows, allowMissingColumns=True)
+        self.vt.write_next(rows, partition_by=cols, layout=self.layout)
 
 
 # public name: the versioned-table discipline is useful beyond the graph
@@ -431,6 +625,14 @@ class GraphStore:
         with open(tmp, "w") as f:
             json.dump(names, f, sort_keys=True)
         os.replace(tmp, self._key_names_path)
+
+    def _node_rewrite(self, label, existing, grow=True) -> _Rewrite:
+        return _Rewrite(self.spark, self._nodes, "label", label, ["key"], existing, grow)
+
+    def _edge_rewrite(self, rel_type, existing, grow=True) -> _Rewrite:
+        return _Rewrite(
+            self.spark, self._edges, "rel_type", rel_type, ["src", "dst"], existing, grow
+        )
 
     # ---------------------------------------------------------------- reads
 
@@ -550,15 +752,15 @@ class GraphStore:
         if order_col and order_col not in prop_cols:
             incoming = incoming.drop(order_col)
 
+        existing = self._nodes.read(self.spark)
+        plan = self._node_rewrite(label, existing)
         # lazy checkpoint: the deduped batch is materialized ONCE (by the
         # bucket-list collect) and reused by the merge join and the write,
         # instead of re-running the dedup window per action; blocks are
         # reclaimed by the ContextCleaner when the merge returns
-        incoming = incoming.withColumn(
-            BUCKET_COL, _bucket_of(F.col("key"))
-        ).localCheckpoint(eager=False)
-
-        existing = self._nodes.read(self.spark)
+        incoming = incoming.withColumn(BUCKET_COL, plan.bucket()).localCheckpoint(
+            eager=False
+        )
         if existing is None:
             # fresh store: every row is CREATED — ON CREATE props apply as
             # plain columns, ON MATCH props cannot apply (no prior row),
@@ -581,7 +783,7 @@ class GraphStore:
                 F.count(F.lit(1)).alias("_created"),
                 *[F.count(F.col(c)).alias(c) for c in counted],
             )
-            self._nodes.write_next(merged, partition_by=["label", BUCKET_COL])
+            plan.write(merged, None, [])
             row = _observed_counters(obs, ["_created", *counted])
             created = int(row["_created"])
             props_set = int(sum(row[c] for c in counted))
@@ -589,22 +791,18 @@ class GraphStore:
 
         # File-pruned MERGE: a batch touches exactly one label, and within
         # it only the key-hash buckets its keys land in — an existing row
-        # for key K can only live in bucket _bucket_of(K). The read is
-        # pruned to (label, touched buckets) and the write rewrites ONLY
-        # those leaf dirs (everything else carries over as hardlinks) —
-        # O(touched buckets) MERGE cost instead of O(label): the manifest
-        # discipline of a Delta/Iceberg MERGE INTO, on hive dirs. The
-        # bucket list is driver-side metadata, bounded by N_KEY_BUCKETS.
-        bucketed = (
-            self._nodes.is_partitioned_by(["label", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
+        # for key K can only live in K's bucket under the label's count.
+        # The read is pruned to (label, touched buckets) and the write
+        # rewrites ONLY those leaf dirs (everything else carries over as
+        # hardlinks) — O(touched buckets) MERGE cost instead of O(label):
+        # the manifest discipline of a Delta/Iceberg MERGE INTO, on hive
+        # dirs. The bucket list is driver-side metadata, bounded by the
+        # label's bucket count. A write that grows the count rewrites the
+        # whole label instead (plan.whole).
         buckets = [
             r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("label") == label)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         all_props = sorted(
             (set(touched.columns) | set(incoming.columns))
             - {NODE_ID, "label", "key", BUCKET_COL}
@@ -696,23 +894,8 @@ class GraphStore:
             F.coalesce(F.col("new.label"), F.col("old.label")).alias("label"),
             F.coalesce(F.col("new.key"), F.col("old.key")).alias("key"),
             *[_prop_expr(c).alias(c) for c in all_props],
-        ).withColumn(BUCKET_COL, _bucket_of(F.col("key")))
-        if bucketed:
-            self._nodes.write_next_partial(
-                merged, ["label", BUCKET_COL], [(label, b) for b in buckets]
-            )
-        else:
-            # legacy layout (unpartitioned, or label-only from an older
-            # store): a partial rewrite would silently drop data (ADVICE
-            # r2) — do one full rewrite that upgrades the layout to
-            # label+bucket partitioning
-            untouched = existing.filter(F.col("label") != label).withColumn(
-                BUCKET_COL, _bucket_of(F.col("key"))
-            )
-            self._nodes.write_next(
-                untouched.unionByName(merged, allowMissingColumns=True),
-                partition_by=["label", BUCKET_COL],
-            )
+        )
+        plan.write(merged, existing, buckets)
         row = _observed_counters(obs, ["_created", *counted])
         created = int(row["_created"])
         props_set = int(sum(row[c] for c in counted))
@@ -862,15 +1045,15 @@ class GraphStore:
             else [F.col("src"), F.col("dst"), F.col("rel_type")]
         )
         w = Window.partitionBy(*pair_keys).orderBy(content_tiebreak.desc())
+        existing = self._edges.read(self.spark)
+        plan = self._edge_rewrite(rel_type, existing)
         incoming = (
             incoming.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
+            .withColumn(BUCKET_COL, plan.bucket())
             .localCheckpoint(eager=False)
         )
-
-        existing = self._edges.read(self.spark)
         if existing is None:
             # fresh store: every edge is CREATED — ON CREATE props apply
             # as plain columns, ON MATCH props cannot apply (no prior
@@ -890,7 +1073,7 @@ class GraphStore:
                 F.count(F.lit(1)).alias("_created"),
                 *[F.count(F.col(c)).alias(c) for c in counted],
             )
-            self._edges.write_next(incoming, partition_by=["rel_type", BUCKET_COL])
+            plan.write(incoming, None, [])
             row = _observed_counters(obs, ["_created", *counted])
             created = int(row["_created"])
             props_set = int(sum(row[c] for c in counted))
@@ -899,19 +1082,12 @@ class GraphStore:
             )
 
         # same file-pruned discipline as merge_nodes: an existing copy of
-        # edge (s,d) can only live in bucket _bucket_of(s,d), so the
-        # join, union, and rewrite touch only this rel_type's touched
-        # buckets
-        bucketed = (
-            self._edges.is_partitioned_by(["rel_type", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
+        # edge (s,d) can only live in the bucket of (s,d), so the join,
+        # union, and rewrite touch only this rel_type's touched buckets
         buckets = [
             r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("rel_type") == rel_type)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         edge_key = ["src", "dst", "rel_type"]
         all_props = sorted(
             (set(touched.columns) | set(incoming.columns))
@@ -1010,26 +1186,8 @@ class GraphStore:
         merged = joined.select(
             *edge_key,
             *[_prop_expr(c).alias(c) for c in all_props],
-        ).withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
-        if bucketed:
-            self._edges.write_next_partial(
-                merged,
-                ["rel_type", BUCKET_COL],
-                [(rel_type, b) for b in buckets],
-            )
-        else:
-            # legacy-layout guard (unpartitioned or rel_type-only store):
-            # full rewrite that upgrades to rel_type+bucket partitioning
-            untouched = existing
-            if BUCKET_COL not in untouched.columns:
-                untouched = untouched.withColumn(
-                    BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                )
-            untouched = untouched.filter(F.col("rel_type") != rel_type)
-            self._edges.write_next(
-                untouched.unionByName(merged, allowMissingColumns=True),
-                partition_by=["rel_type", BUCKET_COL],
-            )
+        )
+        plan.write(merged, existing, buckets)
         row = _observed_counters(obs, ["_created", *counted])
         created = int(row["_created"])
         props_set = int(sum(row[c] for c in counted))
@@ -1080,6 +1238,7 @@ class GraphStore:
         incoming = incoming.withColumn("_ord", F.row_number().over(w) - F.lit(1))
 
         existing = self._nodes.read(self.spark)
+        plan = self._node_rewrite(label, existing)
         if existing is not None:
             prior = (
                 existing.filter(F.col("label") == label)
@@ -1106,7 +1265,7 @@ class GraphStore:
                 F.col("key"),
                 *[F.col(c) for c in prop_cols],
             )
-            .withColumn(BUCKET_COL, _bucket_of(F.col("key")))
+            .withColumn(BUCKET_COL, plan.bucket())
             .persist()
         )
         row = created_rows.agg(
@@ -1116,20 +1275,14 @@ class GraphStore:
         created = int(row["_created"])
         props_set = int(sum(row[c] for c in prop_cols))
         if existing is None:
-            self._nodes.write_next(created_rows, partition_by=["label", BUCKET_COL])
+            plan.write(created_rows, None, [])
             created_rows.unpersist()
             return WriteSummary(nodes_created=created, properties_set=props_set)
-        bucketed = (
-            self._nodes.is_partitioned_by(["label", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
         buckets = [
             r[BUCKET_COL]
             for r in created_rows.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("label") == label)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         all_props = sorted(
             (set(touched.columns) | set(created_rows.columns))
             - {NODE_ID, "label", "key", BUCKET_COL}
@@ -1137,23 +1290,8 @@ class GraphStore:
         merged = (
             _with_missing(touched, created_rows, all_props)
             .unionByName(_with_missing(created_rows, touched, all_props))
-            .withColumn(BUCKET_COL, _bucket_of(F.col("key")))
         )
-        if bucketed:
-            self._nodes.write_next_partial(
-                merged, ["label", BUCKET_COL], [(label, b) for b in buckets]
-            )
-        else:
-            untouched = existing
-            if BUCKET_COL not in untouched.columns:
-                untouched = untouched.withColumn(
-                    BUCKET_COL, _bucket_of(F.col("key"))
-                )
-            untouched = untouched.filter(F.col("label") != label)
-            self._nodes.write_next(
-                untouched.unionByName(merged, allowMissingColumns=True),
-                partition_by=["label", BUCKET_COL],
-            )
+        plan.write(merged, existing, buckets)
         created_rows.unpersist()
         return WriteSummary(nodes_created=created, properties_set=props_set)
 
@@ -1179,6 +1317,8 @@ class GraphStore:
         :meth:`create_nodes`.
         """
         prop_cols = prop_cols or []
+        existing = self._edges.read(self.spark)
+        plan = self._edge_rewrite(rel_type, existing)
         incoming = (
             as_edges(
                 updates,
@@ -1189,7 +1329,7 @@ class GraphStore:
                 dst_key_col,
                 prop_cols,
             )
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
+            .withColumn(BUCKET_COL, plan.bucket())
             .persist()
         )
         row = incoming.agg(
@@ -1198,23 +1338,16 @@ class GraphStore:
         ).collect()[0]
         created = int(row["_created"])
         props_set = int(sum(row[c] for c in prop_cols))
-        existing = self._edges.read(self.spark)
         if existing is None:
-            self._edges.write_next(incoming, partition_by=["rel_type", BUCKET_COL])
+            plan.write(incoming, None, [])
             incoming.unpersist()
             return WriteSummary(
                 relationships_created=created, properties_set=props_set
             )
-        bucketed = (
-            self._edges.is_partitioned_by(["rel_type", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
         buckets = [
             r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("rel_type") == rel_type)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         edge_key = ["src", "dst", "rel_type"]
         all_props = sorted(
             (set(touched.columns) | set(incoming.columns))
@@ -1225,23 +1358,8 @@ class GraphStore:
             _with_missing_edges(touched, incoming, all_props)
             .unionByName(_with_missing_edges(incoming, touched, all_props))
             .drop("_present")
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
         )
-        if bucketed:
-            self._edges.write_next_partial(
-                merged, ["rel_type", BUCKET_COL], [(rel_type, b) for b in buckets]
-            )
-        else:
-            untouched = existing
-            if BUCKET_COL not in untouched.columns:
-                untouched = untouched.withColumn(
-                    BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                )
-            untouched = untouched.filter(F.col("rel_type") != rel_type)
-            self._edges.write_next(
-                untouched.unionByName(merged, allowMissingColumns=True),
-                partition_by=["rel_type", BUCKET_COL],
-            )
+        plan.write(merged, existing, buckets)
         incoming.unpersist()
         return WriteSummary(relationships_created=created, properties_set=props_set)
 
@@ -1286,8 +1404,6 @@ class GraphStore:
                 *[F.col(pc).alias(sc) for sc, pc in prop_map.items()],
             )
             .distinct()
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
-            .persist()
         )
         return self._delete_doomed_edges(doomed, rel_type, prop_map)
 
@@ -1314,8 +1430,6 @@ class GraphStore:
                 *[F.col(pc).alias(sc) for sc, pc in prop_map.items()],
             )
             .distinct()
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
-            .persist()
         )
         return self._delete_doomed_edges(doomed, rel_type, prop_map)
 
@@ -1324,19 +1438,13 @@ class GraphStore:
     ) -> WriteSummary:
         existing = self._edges.read(self.spark)
         if existing is None:
-            doomed.unpersist()
             return WriteSummary()
-        bucketed = (
-            self._edges.is_partitioned_by(["rel_type", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
+        plan = self._edge_rewrite(rel_type, existing, grow=False)
+        doomed = doomed.withColumn(BUCKET_COL, plan.bucket()).persist()
         buckets = [
             r[BUCKET_COL] for r in doomed.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("rel_type") == rel_type)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
-        touched = touched.persist()
+        touched = plan.touched(existing, buckets).persist()
         join_cols = ["src", "dst", "rel_type"] + [
             c for c in prop_map if c in existing.columns
         ]
@@ -1353,30 +1461,7 @@ class GraphStore:
             how="left_anti",
         )
         n_del = touched.count() - survivors.count()
-        if bucketed:
-            self._edges.write_next_partial(
-                survivors.withColumn(
-                    BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                ),
-                ["rel_type", BUCKET_COL],
-                [(rel_type, b) for b in buckets],
-            )
-        else:
-            untouched = existing
-            if BUCKET_COL not in untouched.columns:
-                untouched = untouched.withColumn(
-                    BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                )
-            untouched = untouched.filter(F.col("rel_type") != rel_type)
-            self._edges.write_next(
-                untouched.unionByName(
-                    survivors.withColumn(
-                        BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                    ),
-                    allowMissingColumns=True,
-                ),
-                partition_by=["rel_type", BUCKET_COL],
-            )
+        plan.write(survivors, existing, buckets)
         touched.unpersist()
         doomed.unpersist()
         return WriteSummary(relationships_deleted=int(n_del))
@@ -1402,16 +1487,16 @@ class GraphStore:
         incident edges (the touched list is a tiny distinct-collect of
         rel_type values, driver-side metadata — not data).
         """
+        existing = self._nodes.read(self.spark)
+        if existing is None:
+            return WriteSummary()
+        plan = self._node_rewrite(label, existing, grow=False)
         doomed = (
             as_nodes(keys, label, key_col)
-            .select(NODE_ID, _bucket_of(F.col("key")).alias(BUCKET_COL))
+            .select(NODE_ID, plan.bucket().alias(BUCKET_COL))
             .distinct()
             .persist()
         )
-        existing = self._nodes.read(self.spark)
-        if existing is None:
-            doomed.unpersist()
-            return WriteSummary()
         edges = self._edges.read(self.spark)
         n_rel = 0
         if edges is not None:
@@ -1441,15 +1526,11 @@ class GraphStore:
                 if edges_bucketed:
                     # the REWRITE does prune: only the (rel_type, bucket)
                     # leaves that actually held incident edges are
-                    # rewritten (tiny distinct-collect of leaf metadata)
-                    inc_kb = incident
-                    if BUCKET_COL not in inc_kb.columns:
-                        inc_kb = inc_kb.withColumn(
-                            BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                        )
+                    # rewritten (tiny distinct-collect of leaf metadata);
+                    # every rel_type keeps its bucket count
                     touched_leaves = [
                         (r["rel_type"], r[BUCKET_COL])
-                        for r in inc_kb.select("rel_type", BUCKET_COL).distinct().collect()
+                        for r in incident.select("rel_type", BUCKET_COL).distinct().collect()
                     ]
                     touched_types = sorted({t for t, _ in touched_leaves})
                     leaf_pred = F.lit(False)
@@ -1464,49 +1545,39 @@ class GraphStore:
                         .join(doomed.select(F.col(NODE_ID).alias("dst")), on="dst", how="left_anti")
                     )
                     self._edges.write_next_partial(
-                        survivors, ["rel_type", BUCKET_COL], touched_leaves
+                        survivors,
+                        ["rel_type", BUCKET_COL],
+                        touched_leaves,
+                        layout=_table_layout(self.spark, self._edges, "rel_type", True),
                     )
                 else:
                     # legacy layout: full rewrite, upgrading to
-                    # rel_type+bucket partitioning
+                    # rel_type+bucket partitioning with every rel_type
+                    # sized from its bytes (no rel_type dirs: one bucket)
+                    layout = _table_layout(self.spark, self._edges, "rel_type", False)
                     survivors = (
                         edges.join(doomed.select(F.col(NODE_ID).alias("src")), on="src", how="left_anti")
                         .join(doomed.select(F.col(NODE_ID).alias("dst")), on="dst", how="left_anti")
-                    )
-                    if BUCKET_COL not in survivors.columns:
-                        survivors = survivors.withColumn(
-                            BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
+                        .withColumn(
+                            BUCKET_COL,
+                            _bucket_of(layout, "rel_type", F.col("src"), F.col("dst")),
                         )
+                    )
                     self._edges.write_next(
-                        survivors, partition_by=["rel_type", BUCKET_COL]
+                        survivors, partition_by=["rel_type", BUCKET_COL], layout=layout
                     )
             incident.unpersist()
 
-        nodes_bucketed = (
-            self._nodes.is_partitioned_by(["label", BUCKET_COL])
-            and BUCKET_COL in existing.columns
-        )
-        touched = existing.filter(F.col("label") == label)
         doomed_buckets = [
             r[BUCKET_COL] for r in doomed.select(BUCKET_COL).distinct().collect()
         ]
-        if nodes_bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(doomed_buckets))
+        touched = plan.touched(existing, doomed_buckets)
         kept = touched.join(
             doomed.select(NODE_ID), on=NODE_ID, how="left_anti"
         ).persist()
         n_deleted = touched.count() - kept.count()
         if n_deleted > 0:
-            if nodes_bucketed:
-                self._nodes.write_next_partial(
-                    kept, ["label", BUCKET_COL], [(label, b) for b in doomed_buckets]
-                )
-            else:
-                others = existing.filter(F.col("label") != label)
-                full = others.unionByName(kept, allowMissingColumns=True)
-                if BUCKET_COL not in full.columns:
-                    full = full.withColumn(BUCKET_COL, _bucket_of(F.col("key")))
-                self._nodes.write_next(full, partition_by=["label", BUCKET_COL])
+            plan.write(kept, existing, doomed_buckets)
         kept.unpersist()
         doomed.unpersist()
         return WriteSummary(nodes_deleted=n_deleted, relationships_deleted=n_rel)
@@ -1531,33 +1602,26 @@ class GraphStore:
         """
         if not props:
             raise ValueError("REMOVE needs at least one property")
-        target = (
-            as_nodes(keys, label, key_col)
-            .select(NODE_ID, _bucket_of(F.col("key")).alias(BUCKET_COL))
-            .distinct()
-            .persist()
-        )
         existing = self._nodes.read(self.spark)
         if existing is None:
-            target.unpersist()
             return WriteSummary()
         # Neo4j: REMOVE of a property no node stores is a silent no-op
         # (the verb erases if present) — drop unknown names rather than
         # refuse; if nothing is left the write books zero cells
         props = [p for p in props if p in existing.columns]
         if not props:
-            target.unpersist()
             return WriteSummary()
-        bucketed = (
-            self._nodes.is_partitioned_by(["label", BUCKET_COL])
-            and BUCKET_COL in existing.columns
+        plan = self._node_rewrite(label, existing, grow=False)
+        target = (
+            as_nodes(keys, label, key_col)
+            .select(NODE_ID, plan.bucket().alias(BUCKET_COL))
+            .distinct()
+            .persist()
         )
         buckets = [
             r[BUCKET_COL] for r in target.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("label") == label)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         flagged = touched.join(
             target.select(NODE_ID).withColumn("_hit", F.lit(True)),
             on=NODE_ID,
@@ -1580,18 +1644,8 @@ class GraphStore:
             else F.col(c)
             for c in touched.columns
         ]
-        out = flagged.select(*cols)
         if buckets:
-            if bucketed:
-                self._nodes.write_next_partial(
-                    out, ["label", BUCKET_COL], [(label, b) for b in buckets]
-                )
-            else:
-                others = existing.filter(F.col("label") != label)
-                full = others.unionByName(out, allowMissingColumns=True)
-                if BUCKET_COL not in full.columns:
-                    full = full.withColumn(BUCKET_COL, _bucket_of(F.col("key")))
-                self._nodes.write_next(full, partition_by=["label", BUCKET_COL])
+            plan.write(flagged.select(*cols), existing, buckets)
         flagged.unpersist()
         target.unpersist()
         return WriteSummary(properties_set=n_erased)
@@ -1616,18 +1670,8 @@ class GraphStore:
         hardlinks."""
         if not props:
             raise ValueError("REMOVE needs at least one property")
-        target = (
-            as_edges(
-                pairs, rel_type, src_label, src_key_col, dst_label, dst_key_col
-            )
-            .select("src", "dst")
-            .distinct()
-            .withColumn(BUCKET_COL, _bucket_of(F.col("src"), F.col("dst")))
-            .persist()
-        )
         existing = self._edges.read(self.spark)
         if existing is None:
-            target.unpersist()
             return WriteSummary()
         # Neo4j: REMOVE of a property no relationship stores is a silent
         # no-op (the verb erases if present) — drop unknown names rather
@@ -1635,18 +1679,21 @@ class GraphStore:
         # left the write books zero cells
         props = [p for p in props if p in existing.columns]
         if not props:
-            target.unpersist()
             return WriteSummary()
-        bucketed = (
-            self._edges.is_partitioned_by(["rel_type", BUCKET_COL])
-            and BUCKET_COL in existing.columns
+        plan = self._edge_rewrite(rel_type, existing, grow=False)
+        target = (
+            as_edges(
+                pairs, rel_type, src_label, src_key_col, dst_label, dst_key_col
+            )
+            .select("src", "dst")
+            .distinct()
+            .withColumn(BUCKET_COL, plan.bucket())
+            .persist()
         )
         buckets = [
             r[BUCKET_COL] for r in target.select(BUCKET_COL).distinct().collect()
         ]
-        touched = existing.filter(F.col("rel_type") == rel_type)
-        if bucketed:
-            touched = touched.filter(F.col(BUCKET_COL).isin(buckets))
+        touched = plan.touched(existing, buckets)
         flagged = touched.join(
             target.select("src", "dst").withColumn("_hit", F.lit(True)),
             on=["src", "dst"],
@@ -1669,20 +1716,8 @@ class GraphStore:
             else F.col(c)
             for c in touched.columns
         ]
-        out = flagged.select(*cols)
         if buckets:
-            if bucketed:
-                self._edges.write_next_partial(
-                    out, ["rel_type", BUCKET_COL], [(rel_type, b) for b in buckets]
-                )
-            else:
-                others = existing.filter(F.col("rel_type") != rel_type)
-                full = others.unionByName(out, allowMissingColumns=True)
-                if BUCKET_COL not in full.columns:
-                    full = full.withColumn(
-                        BUCKET_COL, _bucket_of(F.col("src"), F.col("dst"))
-                    )
-                self._edges.write_next(full, partition_by=["rel_type", BUCKET_COL])
+            plan.write(flagged.select(*cols), existing, buckets)
         flagged.unpersist()
         target.unpersist()
         return WriteSummary(properties_set=n_erased)
@@ -1773,23 +1808,22 @@ class GraphStore:
         construction (same rows, new layout).
         """
         if table == "nodes":
-            vt, pcol, id_col, kb = self._nodes, "label", NODE_ID, _bucket_of(F.col("key"))
+            vt, pcol, id_col, key_cols = self._nodes, "label", NODE_ID, ["key"]
         elif table == "edges":
-            vt, pcol, id_col, kb = (
-                self._edges,
-                "rel_type",
-                "src",
-                _bucket_of(F.col("src"), F.col("dst")),
-            )
+            vt, pcol, id_col, key_cols = self._edges, "rel_type", "src", ["src", "dst"]
         else:
             raise ValueError(f"unknown table: {table!r}")
         df = vt.read(self.spark)
         if df is None:
             return None
-        if BUCKET_COL not in df.columns:
+        bucketed = vt.is_partitioned_by([pcol, BUCKET_COL]) and BUCKET_COL in df.columns
+        layout = _table_layout(self.spark, vt, pcol, bucketed)
+        if not bucketed:
             # compacting a legacy store also upgrades it to the bucketed
             # layout (the one full rewrite the upgrade needs anyway)
-            df = df.withColumn(BUCKET_COL, kb)
+            df = df.withColumn(
+                BUCKET_COL, _bucket_of(layout, pcol, *[F.col(c) for c in key_cols])
+            )
         keys = [F.col(pcol), F.col(BUCKET_COL)]
         if files_per_value > 1:
             keys.append(F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_value)))
@@ -1798,7 +1832,7 @@ class GraphStore:
         # files_per_value tasks, so each hive dir gets at most that many
         # files
         return vt.write_next(
-            df.repartition(*keys), partition_by=[pcol, BUCKET_COL]
+            df.repartition(*keys), partition_by=[pcol, BUCKET_COL], layout=layout
         )
 
 

@@ -12,7 +12,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8)
+    # local[SPARK_GRAFT_CPUS] (default 8), the engine's own sizing rule
+    s = get_spark("tests")
     yield s
 
 

@@ -112,6 +112,23 @@ def test_write_counters_golden(spark, store):
     assert s2.nodes_created == 0 and s2.properties_set == 1
 
 
+def test_empty_batch_merge_counters_golden(spark, store):
+    """A zero-row MERGE batch on a non-empty store writes nothing and
+    reports all-zero counters — the path where Spark prunes the observed
+    subtree to an empty relation and the counters come from the
+    empty-input rule, not from the observation."""
+    from neo4j_graphdb_spark.writer import WriteSummary
+
+    before = sorted(r["node_id"] for r in store.nodes().collect())
+    arts = spark.createDataFrame([], "link string, title string")
+    rels = spark.createDataFrame([], "link string, publisher string")
+    assert store.merge_nodes(arts, "Article", "link", ["title"]) == WriteSummary()
+    assert store.merge_edges(
+        rels, "WRITTEN_BY", "Article", "link", "Publisher", "publisher"
+    ) == WriteSummary()
+    assert sorted(r["node_id"] for r in store.nodes().collect()) == before
+
+
 # ---------------------------------------------------------------------------
 # The same five statements as LITERAL Cypher text through the string
 # front-end (operators/cypher_text.py) — verbatim from the reference.

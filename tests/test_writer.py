@@ -123,10 +123,13 @@ def test_partial_rewrite_hardlinks_untouched_partitions(spark, store, tmp_path):
     pubs_v2 = inodes(v2, "label=Publisher")
     assert pubs_v2 and pubs_v2 == inodes(v3, "label=Publisher")
     # file-pruned MERGE: only u1's bucket rewritten — every OTHER
-    # Article bucket dir carries over as hardlinks too
+    # Article bucket dir carries over as hardlinks too (none while the
+    # label has one bucket; test_split_keeps_untouched_buckets_hardlinked
+    # covers several)
     from neo4j_graphdb_spark.writer import BUCKET_COL, _bucket_of
-    u1_kb = spark.range(1).select(
-        _bucket_of(F.lit("u1")).alias("b")  # buckets hash the key column
+    u1_kb = spark.createDataFrame([("Article", "u1")], "label string, key string").select(
+        # buckets hash the key column, with the label's bucket count
+        _bucket_of(store._nodes.layout(), "label", F.col("key")).alias("b")
     ).collect()[0]["b"]
     arts_v2, arts_v3 = inodes(v2, "label=Article"), inodes(v3, "label=Article")
     untouched_v2 = {f: i for f, i in arts_v2.items() if not f.startswith(f"{BUCKET_COL}={u1_kb}/")}
@@ -303,10 +306,18 @@ def test_compact_bounds_files_and_preserves_data(spark, store):
                     c[os.path.relpath(dp, root)] += 1
         return c
 
-    # 4 merge batches -> several small files across the bucket dirs
-    for i in range(4):
-        b = _batch(spark, [(f"u{i}-{j}", f"t{j}", "c") for j in range(5)])
-        store.merge_nodes(b, "Article", "link", ["title", "content"])
+    # 4 merge batches -> several small files per leaf dir: a small label
+    # has one bucket, and each rewrite of it writes one file unless
+    # capped by maxRecordsPerFile
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for i in range(4):
+            b = _batch(spark, [(f"u{i}-{j}", f"t{j}", "c") for j in range(5)])
+            store.merge_nodes(b, "Article", "link", ["title", "content"])
+    finally:
+        spark.conf.set(key, prev)
     before = {r["key"]: r["title"] for r in store.nodes().collect()}
     v_before = store._nodes.current_version()
     assert sum(leaf_files(store._nodes.current_path()).values()) > 1
@@ -758,3 +769,182 @@ def test_merge_edges_match_val_cols(spark, tmp_path):
             create_prop_cols=["w_c"], match_add_cols={"w_c": "w_m"},
             match_val_cols={"w_c": "w_m"},
         )
+
+
+# ---------------------------------------------------------------------------
+# Per-label bucket counts sized from the label's bytes on disk
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def split_bytes(spark):
+    """Set spark.sql.files.maxPartitionBytes (the per-bucket byte target)
+    to a few KB, so a handful of small merges force bucket splits;
+    restored afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+
+    def _set(nbytes):
+        spark.conf.set(key, str(nbytes))
+        return nbytes
+
+    yield _set
+    spark.conf.set(key, prev)
+
+
+def _value_state(vt, pcol, value):
+    """(bucket count, sorted bucket dir names, parquet bytes) of one
+    label/rel_type in the current version."""
+    import os
+
+    from neo4j_graphdb_spark.writer import _tree_bytes
+
+    d = os.path.join(vt.current_path() or "", f"{pcol}={value}")
+    if not os.path.isdir(d):
+        return (vt.layout() or {}).get(value, 1), [], 0
+    return vt.layout()[value], sorted(os.listdir(d)), _tree_bytes(d)
+
+
+def _size_rule(n_before, nbytes, target):
+    n = 1
+    while nbytes > n * target:
+        n *= 2
+    return max(n_before, n)
+
+
+def test_bucket_count_follows_size_rule_across_doublings(spark, store, split_bytes):
+    """Each write sizes the label's bucket count from the bytes it finds
+    on disk (smallest power of two with bytes/n <= maxPartitionBytes,
+    never shrinking); a split rewrites the whole label, so the contents
+    match a plain dict model, no bucket dir of the old count survives,
+    re-merged keys are found (0 created), and versions from before a
+    split still read back as they were."""
+    target = split_bytes(3000)
+    model, snapshots, counts = {}, {}, []
+    for i in range(4):
+        rows = [(f"k{i}-{j}", f"t{i}-{j}", "c" * 30) for j in range(100)]
+        n_before, _, nbytes = _value_state(store._nodes, "label", "Article")
+        s = store.merge_nodes(_batch(spark, rows), "Article", "link", ["title", "content"])
+        assert s.nodes_created == len(rows)
+        model.update({k: t for k, t, _ in rows})
+        n, dirs, _ = _value_state(store._nodes, "label", "Article")
+        assert n == _size_rule(n_before, nbytes, target), (i, n_before, nbytes, n)
+        assert set(dirs) <= {f"_kb={b}" for b in range(n)}, dirs
+        snapshots[store._nodes.current_version()] = dict(model)
+        counts.append(n)
+    assert counts[0] == 1 and len(set(counts)) >= 3, counts  # >= 2 doublings
+    assert {r["key"]: r["title"] for r in store.nodes().collect()} == model
+
+    # re-merge every key with new titles after the splits: all found
+    rows = [(k, t + "x", None) for k, t in model.items()]
+    s = store.merge_nodes(_batch(spark, rows), "Article", "link", ["title", "content"])
+    assert s.nodes_created == 0 and s.properties_set == len(rows)
+    model = {k: t + "x" for k, t in model.items()}
+    assert {r["key"]: r["title"] for r in store.nodes().collect()} == model
+
+    # time travel to versions written under the earlier bucket counts
+    for v, snap in snapshots.items():
+        assert {r["key"]: r["title"] for r in store.nodes(version=v).collect()} == snap
+
+
+def test_edge_bucket_split_keeps_merge_idempotent(spark, store, split_bytes):
+    """Same size rule on a rel_type: after it splits, re-merging every
+    edge creates none, and the edge set matches the model."""
+    target = split_bytes(1200)
+    arts = _batch(spark, [(f"a{j}", "t", "c") for j in range(60)])
+    store.merge_nodes(arts, "Article", "link", ["title"])
+    pubs = spark.createDataFrame([(f"p{j}",) for j in range(5)], "name string")
+    store.merge_nodes(pubs, "Publisher", "name", [])
+    pairs = set()
+    counts = []
+    for i in range(3):
+        batch = [(f"a{j}", f"p{(j + i) % 5}") for j in range(60)]
+        n_before, _, nbytes = _value_state(store._edges, "rel_type", "WRITTEN_BY")
+        rel = spark.createDataFrame(batch, "link string, publisher string")
+        s = store.merge_edges(rel, "WRITTEN_BY", "Article", "link", "Publisher", "publisher")
+        assert s.relationships_created == len(batch)
+        pairs |= set(batch)
+        n, _, _ = _value_state(store._edges, "rel_type", "WRITTEN_BY")
+        assert n == _size_rule(n_before, nbytes, target)
+        counts.append(n)
+    assert counts[-1] > 1, counts
+    rel = spark.createDataFrame(sorted(pairs), "link string, publisher string")
+    s = store.merge_edges(rel, "WRITTEN_BY", "Article", "link", "Publisher", "publisher")
+    assert s.relationships_created == 0
+    assert store.edges().count() == len(pairs)
+
+
+def test_split_keeps_untouched_buckets_hardlinked(spark, store, split_bytes):
+    """With several buckets, a merge touching one key rewrites only that
+    key's bucket: every other bucket's files carry over as hardlinks."""
+    import os
+
+    split_bytes(1000)
+    rows = [(f"u{j}", "t", "c" * 30) for j in range(150)]
+    store.merge_nodes(_batch(spark, rows), "Article", "link", ["title", "content"])
+    store.merge_nodes(_batch(spark, rows[:1]), "Article", "link", ["title", "content"])
+    n, dirs, _ = _value_state(store._nodes, "label", "Article")
+    assert n > 1 and len(dirs) > 1
+
+    def inodes(version_dir):
+        d = os.path.join(version_dir, "label=Article")
+        return {
+            os.path.relpath(os.path.join(dp, fn), d): os.stat(os.path.join(dp, fn)).st_ino
+            for dp, _, fns in os.walk(d)
+            for fn in fns
+            if fn.endswith(".parquet")
+        }
+
+    before = inodes(store._nodes.current_path())
+    split_bytes(128 * 1024 * 1024)  # no further split
+    store.merge_nodes(_batch(spark, [("u7", "t7", None)]), "Article", "link", ["title", "content"])
+    assert store._nodes.layout()["Article"] == n
+    after = inodes(store._nodes.current_path())
+    changed = {
+        os.path.dirname(f) for f in before.keys() | after.keys()
+        if before.get(f) != after.get(f)
+    }
+    assert len(changed) == 1, changed  # u7's bucket only
+    kept = {f: i for f, i in before.items() if os.path.dirname(f) not in changed}
+    assert kept and all(after[f] == i for f, i in kept.items())
+    assert {r["key"]: r["title"] for r in store.nodes().collect()}["u7"] == "t7"
+
+
+def test_legacy_16_bucket_version_keeps_merging(spark, tmp_path):
+    """A version written before layout records (16 key buckets per label,
+    no _layout.json) reads as 16 buckets for every label: merges find
+    existing keys, deletes prune to the right bucket, and the next
+    version records the counts."""
+    import os
+
+    from neo4j_graphdb_spark.model import as_nodes
+    from neo4j_graphdb_spark.writer import (
+        BUCKET_COL, LAYOUT_FILE, LEGACY_BUCKETS, GraphStore, _VersionedTable,
+    )
+
+    root = str(tmp_path / "graph")
+    rows = [(f"u{j}", f"t{j}", "c") for j in range(40)]
+    legacy = as_nodes(_batch(spark, rows), "Article", "link", ["title", "content"]).withColumn(
+        BUCKET_COL, F.pmod(F.xxhash64(F.col("key")), F.lit(16)).cast("int")
+    )
+    _VersionedTable(os.path.join(root, "nodes")).write_next(
+        legacy, partition_by=["label", BUCKET_COL]
+    )
+    store = GraphStore(spark, root)
+    assert store._nodes.layout() is None
+    assert not os.path.exists(os.path.join(store._nodes.current_path(), LAYOUT_FILE))
+
+    s = store.merge_nodes(
+        _batch(spark, [("u3", "t3x", None), ("u30", "t30x", None), ("n1", "tn", "c")]),
+        "Article", "link", ["title", "content"],
+    )
+    assert s.nodes_created == 1
+    assert store._nodes.layout() == {"Article": LEGACY_BUCKETS}
+    model = {k: t for k, t, _ in rows} | {"u3": "t3x", "u30": "t30x", "n1": "tn"}
+    assert {r["key"]: r["title"] for r in store.nodes().collect()} == model
+
+    d = store.delete_nodes(spark.createDataFrame([("u5",)], "link string"), "Article", "link")
+    assert d.nodes_deleted == 1
+    store.merge_nodes(spark.createDataFrame([("P1",)], "name string"), "Publisher", "name", [])
+    assert store._nodes.layout() == {"Article": LEGACY_BUCKETS, "Publisher": 1}
+    assert store.nodes().count() == len(model)  # minus u5, plus P1
