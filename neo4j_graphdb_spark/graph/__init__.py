@@ -1,4 +1,3 @@
-from neo4j_graphdb_spark.graph.pregel import pregel
 from neo4j_graphdb_spark.graph.algorithms import (
     degrees,
     pagerank,
@@ -10,7 +9,6 @@ from neo4j_graphdb_spark.graph.algorithms import (
 )
 
 __all__ = [
-    "pregel",
     "degrees",
     "pagerank",
     "connected_components",

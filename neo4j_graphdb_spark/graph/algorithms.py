@@ -1,14 +1,18 @@
 """Graph algorithms over canonical nodes/edges DataFrames (tier C1-C6).
 
 All algorithms take ``edges(src, dst, …)`` (+ optionally ``nodes``) and
-return DataFrames; iterative ones ride :mod:`pregel`-style driver loops
-with per-step ``localCheckpoint``. Nothing here uses RDDs or UDFs.
+return DataFrames; iterative ones are Python driver loops with per-step
+``localCheckpoint``. BFS, Bellman-Ford and min-id flooding share the one
+frontier loop in :mod:`.pregel`; the others still run their own.
+Nothing here uses RDDs or UDFs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from neo4j_graphdb_spark.graph.pregel import _min_relax
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -328,45 +332,20 @@ def _cc_star(
 def _cc_min_propagation(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 20, id_col: str = "node_id"
 ) -> DataFrame:
-    """Min-id flooding — O(diameter) supersteps, one shuffle each."""
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .localCheckpoint()
+    """Min-id flooding — O(diameter) supersteps; only the vertices whose
+    label dropped last round send. Edges with an endpoint outside
+    ``nodes`` carry nothing."""
+    ids = nodes.select(F.col(id_col).alias("id")).distinct()
+    e = (
+        edges.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
+        .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
     )
-    comp = (
-        nodes.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .repartition("id")
-        .localCheckpoint()
+    und = e.select("src", "dst").unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    for _ in range(max_iter):
-        msgs = (
-            comp.join(und, comp["id"] == und["src"])
-            .select(F.col("dst").alias("id"), F.col("comp").alias("m"))
-            .groupBy("id")
-            .agg(F.min("m").alias("m"))
-        )
-        new_comp = comp.join(msgs, on="id", how="left").select(
-            "id", F.least(F.col("comp"), F.coalesce(F.col("m"), F.col("comp"))).alias("comp")
-        )
-        # lazy: the `changed` probe below materializes the checkpoint in
-        # the same job that answers convergence (was 2 jobs per round)
-        new_comp = new_comp.localCheckpoint(eager=False)
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), on="id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
-            break
-    return comp
+    return _min_relax(
+        ids.withColumn("comp", F.col("id")), und, "comp", max_rounds=max_iter
+    )
 
 
 def shortest_paths(
@@ -377,34 +356,16 @@ def shortest_paths(
 ) -> DataFrame:
     """C4 — unweighted BFS distances from a set of source node ids.
 
-    Frontier expansion: dist' = min(dist, frontier ⋈ edges + 1); visited
-    set kept as the accumulating dist table (anti-join replaces it).
+    Frontier expansion: dist' = min(dist, frontier ⋈ edges + 1) for at
+    most ``max_hops`` rounds (:func:`.pregel._min_relax`).
     Bounded-depth — the engine's variable-length-path substrate
     (Cypher ``()-[*1..k]->()``).
     """
-    # one checkpoint so per-hop expansion reads materialized edge blocks
-    # instead of re-running the caller's construction chain per hop
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    dist = sources.select(F.col(id_col).alias("id")).distinct().withColumn(
-        "dist", F.lit(0)
-    ).localCheckpoint()
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        # ONE job per hop: count() materializes the lazy checkpoint and
-        # answers the emptiness exit (was 3 jobs: eager ckpt +
-        # limit(1).count() + eager union ckpt)
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(dist, on="id", how="left_anti")
-            .withColumn("dist", F.lit(hop))
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return dist
+    seeds = sources.select(F.col(id_col).alias("id")).distinct()
+    return _min_relax(
+        seeds.withColumn("dist", F.lit(0)), edges, "dist",
+        max_rounds=max_hops, addend=F.lit(1),
+    )
 
 
 def pairwise_shortest_paths(
@@ -417,9 +378,9 @@ def pairwise_shortest_paths(
     shortestPath's minimal length 1 — the ITERATIVE companion of the
     lazy a56 join ladder, used by the text front-end for unbounded
     ``shortestPath((a)-[:T*]->(b))``: level h holds the pairs FIRST
-    reached in exactly h oriented steps (per-level distinct + anti-join
-    against the accumulated pair table = first-reach level, identical
-    to the ladder's ``min(hops)``), and the loop exits at the first
+    reached in exactly h oriented steps (per-pair min of h over the
+    frontier = first-reach level, identical to the ladder's
+    ``min(hops)``), and the loop exits at the first
     empty frontier, so "unbounded" costs diameter rounds, not
     ``max_rounds`` (a runaway-cycle backstop, not a schedule).
 
@@ -427,40 +388,14 @@ def pairwise_shortest_paths(
     through a cycle reports the cycle length — exactly the bounded
     ladder's semantics. State is |sources| × reachable pairs; at 100 TB
     batch the sources (same geometry as :func:`weighted_sssp`).
-    Frontier and dist checkpoint per round — the lineage would
-    otherwise double per superstep.
+    An empty result keeps the ``(source, id, hops)`` schema.
     """
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    frontier = (
-        sources.select(F.col(id_col).alias("source"))
-        .distinct()
-        .select("source", F.col("source").alias("id"))
-        .localCheckpoint(eager=False)
+    seeds = sources.select(F.col(id_col).alias("source")).distinct()
+    return _min_relax(
+        seeds.select("source", F.col("source").alias("id"), F.lit(0).alias("hops")),
+        edges, "hops", max_rounds=max_rounds, keys=("source",),
+        addend=F.lit(1), emit_seeds=False,
     )
-    dist = None
-    for h in range(1, max_rounds + 1):
-        nxt = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-        )
-        if dist is not None:
-            nxt = nxt.join(dist.select("source", "id"), on=["source", "id"], how="left_anti")
-        # ONE job per round (count materializes + answers emptiness)
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        tagged = nxt.withColumn("hops", F.lit(h))
-        dist = (
-            tagged if dist is None
-            else dist.unionByName(tagged).localCheckpoint(eager=False)
-        )
-        frontier = nxt
-    if dist is None:  # no source has any out-edge
-        return frontier.select("source", "id").limit(0).withColumn(
-            "hops", F.lit(0)
-        )
-    return dist
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -740,55 +675,28 @@ def weighted_shortest_paths(
     weight_col: str = "weight",
 ) -> DataFrame:
     """C-tier extension — single-source(-set) weighted shortest paths by
-    synchronous Bellman-Ford supersteps: each round relaxes every edge
-    once, ``dist' = min(dist, min over (u,v,w) of dist[u] + w)``; after
-    i rounds every ≤i-edge shortest path is exact, and the loop
-    early-exits at the fixpoint (checksum unchanged — same
-    one-action-per-round pattern as ``connected_components``; a
-    convergence check by join would cost a second shuffle).
+    synchronous Bellman-Ford supersteps,
+    ``dist' = min(dist, min over (u,v,w) of dist[u] + w)``; after i
+    rounds every ≤i-edge shortest path is exact. Only the vertices whose
+    distance dropped last round send (the others already relaxed their
+    out-edges, so the round-i answer is unchanged), and the loop exits
+    when a round improves no vertex — the count of improved rows that is
+    the round's one Spark action.
 
     Non-negative weights assumed (no negative-cycle detection — this is
     the Cypher ``shortestPath`` with cost substrate, not a finance
-    engine). Each superstep is one join (dist ⋈ edges, shuffle on the
-    edge src) + one ``groupBy(id).min`` — both keyed shuffles on node
-    id, no broadcast of anything growing, so the 100×-scale story is
-    the standard Pregel one: O(diameter) rounds of O(|E|) work.
+    engine). A vertex reached only over null weights is listed with a
+    null distance. Each superstep is one join (frontier ⋈ edges) and one
+    ``groupBy(id).min`` over the dist table and the messages — keyed
+    shuffles on node id, no broadcast of anything growing, so the
+    100×-scale story is the standard Pregel one: O(diameter) rounds of
+    at most O(|E|) work.
     """
-    # one checkpoint so each relax superstep reads materialized edge
-    # blocks instead of re-running the caller's edge-construction chain
-    # (guide §2.4/§5 — same fix as hits/pagerank/shortest_paths)
-    edges = edges.select("src", "dst", weight_col).localCheckpoint(eager=False)
-    dist = (
-        sources.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0.0))
-        .localCheckpoint()
+    seeds = sources.select(F.col(id_col).alias("id")).distinct()
+    return _min_relax(
+        seeds.withColumn("dist", F.lit(0.0)), edges, "dist",
+        max_rounds=max_iter, addend=F.col(weight_col).cast("double"),
     )
-    prev: tuple | None = None
-    for _ in range(max_iter):
-        relaxed = dist.join(edges, dist["id"] == edges["src"]).select(
-            F.col("dst").alias("id"),
-            (F.col("dist") + F.col(weight_col).cast("double")).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        # xxhash64 over the DOUBLE column hashes its raw
-        # doubleToLongBits (with only -0.0 normalized to 0.0), so ANY
-        # relaxation — even below 1e-9 — changes the checksum; rounding
-        # to decimals here could stop the loop before the true fixpoint.
-        row = dist.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(id, dist))").alias("h"),
-        ).collect()[0]
-        cur = (row["n"], row["h"])
-        if cur == prev:
-            break
-        prev = cur
-    return dist
 
 
 def hits(
@@ -1118,11 +1026,7 @@ def _landmark_distances(
     ``(lm, id, dist)`` min-distances from the ``n_landmarks`` nodes with
     the smallest ``md5(id)`` (deterministic, RNG-free, replayable in the
     SQL oracles). O(V · k) rows; each round is one frontier⋈edges
-    shuffle plus an anti-join against the visited set."""
-    # one checkpoint so the per-hop frontier joins read materialized
-    # blocks instead of re-running the caller's edge-construction chain
-    # max_hops times (guide §2.4/§5 — same fix as hits/pagerank)
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    shuffle plus a merge into the visited set."""
     nodes = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -1133,27 +1037,10 @@ def _landmark_distances(
         .limit(n_landmarks)
         .select(F.col("id").alias("lm"))
     )
-    dist = landmarks.select(
-        "lm", F.col("lm").alias("id"), F.lit(0).alias("dist")
-    ).localCheckpoint()
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        # ONE job per hop: the count() both materializes the lazy
-        # checkpoint and answers the emptiness exit (the previous shape
-        # — eager checkpoint, then limit(1).count(), then an eager
-        # union checkpoint — was three driver-blocking jobs per hop)
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select("lm", F.col("dst").alias("id"))
-            .distinct()
-            .join(dist, on=["lm", "id"], how="left_anti")
-            .withColumn("dist", F.lit(hop))
-        ).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return dist
+    return _min_relax(
+        landmarks.select("lm", F.col("lm").alias("id"), F.lit(0).alias("dist")),
+        edges, "dist", max_rounds=max_hops, keys=("lm",), addend=F.lit(1),
+    )
 
 
 def landmark_closeness(
@@ -1173,8 +1060,8 @@ def landmark_closeness(
     ``md5(id)`` — a deterministic, uniformly-spread sample that needs no
     RNG state and replays bit-identically in the SQL oracle. The BFS
     carries ``(landmark, node, dist)`` state — O(V · k) rows, k fixed —
-    and each round is one frontier⋈edges shuffle plus an anti-join
-    against the visited set, the same bounded-frontier shape as
+    and each round is one frontier⋈edges shuffle plus a merge into the
+    visited set, the same bounded-frontier loop as
     :func:`shortest_paths`.
 
     Returns ``(id, n_reached, harmonic_x12)`` for every node that
@@ -2413,48 +2300,15 @@ def weighted_sssp(
     shortestPath text ladder, which Catalyst prunes per-pair).
 
     No reference twin (the reference has no weighted paths; SURVEY §2.C
-    north-star companion of C4). Frontier and dist checkpoint per round
-    — the lineage would otherwise double per superstep.
+    north-star companion of C4). A vertex reached only over null
+    weights is listed with a null distance.
     """
-    dist = (
-        sources.select(F.col(id_col).alias("source"))
-        .distinct()
-        .select(
-            "source",
-            F.col("source").alias("id"),
-            F.lit(0.0).alias("dist"),
-        )
-        .localCheckpoint()
+    seeds = sources.select(F.col(id_col).alias("source")).distinct()
+    return _min_relax(
+        seeds.select("source", F.col("source").alias("id"), F.lit(0.0).alias("dist")),
+        edges, "dist", max_rounds=max_rounds, keys=("source",),
+        addend=F.col("weight"),
     )
-    frontier = dist
-    for _ in range(max_rounds):
-        cand = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("weight")).alias("dist"),
-            )
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        old = dist.select(
-            "source", "id", F.col("dist").alias("_old")
-        )
-        improved = (
-            cand.join(old, ["source", "id"], "left")
-            .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("source", "id", "dist")
-        ).localCheckpoint()
-        if improved.limit(1).count() == 0:
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-        ).localCheckpoint()
-        frontier = improved
-    return dist
 
 
 def csr_export(edges: DataFrame, bucket_width: int = 1000) -> DataFrame:

@@ -1,79 +1,77 @@
-"""Pregel-on-DataFrames: the iterative superstep substrate (SURVEY.md §4).
+"""Frontier min-relaxation: the superstep loop behind BFS, Bellman-Ford
+and min-id flooding (SURVEY.md §4).
 
 Catalyst has no fixpoint operator, so iteration lives in a Python driver
 loop (the one place SURVEY.md licenses imperative control flow). Each
-superstep is pure DataFrame algebra:
+superstep is pure DataFrame algebra over a state table
+``(keys…, id, value)``:
 
-    messages  = vertices ⋈ edges  → groupBy(dst).agg(merge)
-    vertices' = vertices ⟕ messages → vprog columns
+    messages = improved ⋈ edges → value + addend
+    state'   = (state ∪ messages) → min per (keys…, id)
 
-Scale mechanics (the 100 TB story):
+Only the rows that improved last round send messages — Pregelix's
+live-frontier join (PAPERS.md). A row that did not improve has already
+relaxed its out-edges, so frontier relaxation equals full relaxation at
+every round count, and a round cap keeps its k-round meaning.
 
-* ``localCheckpoint()`` every superstep truncates lineage — without it the
-  plan doubles per iteration and the optimizer chokes by step ~15.
-* The vertex table is hash-partitioned on ``id`` once and every join
-  reuses that partitioning, so a superstep costs ONE shuffle (messages),
-  not three.
-* AQE handles power-law skew (celebrity vertices) via skew-join splitting.
-
-This is the GraphFrames/Pregelix dataflow formulation (PAPERS.md), not
-GraphX: no RDDs, everything stays in Tungsten rows.
+Each round is one lazily cut lineage (``localCheckpoint(eager=False)``)
+and one Spark action: the ``count`` of improved rows materializes the
+checkpoint and answers the exit, which fires only when no row improved.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pregel(
-    vertices: DataFrame,
+def _min_relax(
+    seeds: DataFrame,
     edges: DataFrame,
-    initial_state: dict[str, Column],
-    send_msg: Callable[[], Column],
-    agg_msg: Callable[[Column], Column],
-    update_state: dict[str, Callable[[], Column]],
-    max_iter: int = 20,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    id_col: str = "id",
-    checkpoint_every: int = 1,
-    until_converged: str | None = None,
+    value: str,
+    max_rounds: int,
+    keys: tuple[str, ...] = (),
+    addend: Column | None = None,
+    emit_seeds: bool = True,
 ) -> DataFrame:
-    """Generic superstep loop.
+    """Monotone min-relaxation from ``seeds(keys…, id, value)`` over
+    ``edges(src, dst, …)``; returns ``(keys…, id, value)``.
 
-    * ``initial_state``: new state columns added to ``vertices``.
-    * ``send_msg()``: expression over the joined (src-vertex ⋈ edge) row;
-      source vertex state columns are visible as ``F.col("<name>")``.
-    * ``agg_msg(msg)``: aggregate over incoming messages per destination.
-    * ``update_state``: per state column, expression over
-      (old state columns, ``F.col("_msg")``).
-    * ``until_converged``: name of a boolean column computed by
-      ``update_state``; loop stops early when no vertex has it true.
+    * ``addend``: edge-column expression added to the sender's value
+      (``F.lit(1)`` for BFS, the weight for Bellman-Ford); ``None``
+      floods the value itself (min-id labels, which may be strings). A
+      key reached only by null messages is listed with a null value.
+    * ``emit_seeds=False`` keeps the seeds out of the known set: a seed
+      re-reached through a cycle reports the cycle's length.
     """
-    v = vertices.select(F.col(id_col), *[e.alias(n) for n, e in initial_state.items()])
-    state_cols = list(initial_state.keys())
-    v = v.repartition(id_col).localCheckpoint()
-
-    e = edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
-
-    for it in range(max_iter):
-        msgs = (
-            v.join(e, v[id_col] == e["_src"])
-            .select(F.col("_dst").alias(id_col), send_msg().alias("_m"))
-            .groupBy(id_col)
-            .agg(agg_msg(F.col("_m")).alias("_msg"))
+    by = [*keys, "id"]
+    e = edges.select(
+        "src", "dst", *([] if addend is None else [addend.alias("_w")])
+    ).localCheckpoint(eager=False)
+    msg = F.col(value) if addend is None else F.col(value) + F.col("_w")
+    frontier = seeds.select(*by, value).localCheckpoint(eager=False)
+    state = frontier if emit_seeds else frontier.limit(0)
+    for _ in range(max_rounds):
+        msgs = frontier.join(e, frontier["id"] == e["src"]).select(
+            *keys, F.col("dst").alias("id"), F.lit(None).alias("_old"), msg.alias("_m")
         )
-        new_v = v.join(msgs, on=id_col, how="left").select(
-            F.col(id_col),
-            *[update_state[c]().alias(c) for c in state_cols],
+        # one shuffle merges the messages into the state: per (keys…, id)
+        # the known value and the least message
+        state = (
+            state.select(*by, F.col(value).alias("_old"), F.lit(None).alias("_m"))
+            .unionByName(msgs)
+            .groupBy(*by)
+            .agg(F.min("_old").alias("_old"), F.min("_m").alias("_m"))
+            .select(
+                *by,
+                F.least("_old", "_m").alias(value),
+                # a message strictly below the known value, or the first one
+                F.coalesce(F.col("_m") < F.col("_old"), F.col("_m").isNotNull())
+                .alias("_improved"),
+            )
+            .localCheckpoint(eager=False)
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            new_v = new_v.localCheckpoint()
-        v = new_v
-        if until_converged is not None:
-            if v.filter(F.col(until_converged)).limit(1).count() == 0:
-                break
-    return v
+        frontier = state.filter("_improved")
+        if frontier.count() == 0:
+            break
+    return state.select(*by, value)

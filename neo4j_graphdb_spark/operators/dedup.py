@@ -45,6 +45,20 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 _BAG_ALPHABET = "abcdefghijklmnopqrstuvwxyz "
 
 
+def _bag():
+    """Bag-of-chars of ``_key`` (length ``_len``): one int count per
+    :data:`_BAG_ALPHABET` character, the arrays :func:`_bag_l1` compares."""
+    return F.array(
+        *[
+            (
+                F.col("_len")
+                - F.length(F.replace(F.col("_key"), F.lit(ch), F.lit("")))
+            ).cast("int")
+            for ch in _BAG_ALPHABET
+        ]
+    )
+
+
 def _bag_l1(left: str, right: str):
     """L1 distance of two fixed-length bag-of-chars int arrays, unrolled
     to ``abs(l[0]-r[0]) + … + abs(l[26]-r[26])``. The higher-order
@@ -101,25 +115,13 @@ def levenshtein_near_dup(
     # L1 > 2*max_dist prune BEFORE the O(prefix²) DP. This carries the
     # candidate pruning when the length bands cannot (fixed-length
     # prefixes all share one band).
-    _alphabet = "abcdefghijklmnopqrstuvwxyz "
     base = (
         df.select(
             F.col(id_col), *[F.col(c) for c in blocks], key.alias("_key")
         )
         .withColumn("_len", F.length("_key"))
         .withColumn("_band", (F.col("_len") / band).cast("long"))
-        .withColumn(
-            "_bag",
-            F.array(
-                *[
-                    (
-                        F.col("_len")
-                        - F.length(F.replace(F.col("_key"), F.lit(ch), F.lit("")))
-                    ).cast("int")
-                    for ch in _alphabet
-                ]
-            ),
-        )
+        .withColumn("_bag", _bag())
         .localCheckpoint(eager=False)
     )
     # asymmetric slot emission: the LEFT side sits in its own band only,
@@ -237,7 +239,6 @@ def levenshtein_near_dup_segments(
     # a W-times-fatter join output
     w = 2 * max_dist
     key = F.substring(F.lower(F.col(text_col)), 1, prefix)
-    _alphabet = "abcdefghijklmnopqrstuvwxyz "
     base = (
         df.select(F.col(id_col).alias("_id"), key.alias("_key"))
         .withColumn("_len", F.length("_key"))
@@ -340,15 +341,7 @@ def levenshtein_near_dup_segments(
     # (two id-keyed joins — linear; the pair set is already minimal),
     # prune by the exact L1/2 <= levenshtein lower bound, then the JVM
     # codegen DP
-    bag = F.array(
-        *[
-            (
-                F.col("_len")
-                - F.length(F.replace(F.col("_key"), F.lit(ch), F.lit("")))
-            ).cast("int")
-            for ch in _alphabet
-        ]
-    )
+    bag = _bag()
     sides = base.select(
         "_id", F.col("_key"), F.col("_len"), bag.alias("_bag")
     )
@@ -425,7 +418,6 @@ def levenshtein_join(
         )
     k = max_dist + 1
     w = 2 * max_dist
-    _alphabet = "abcdefghijklmnopqrstuvwxyz "
 
     def _base(df, text, ident):
         key = F.substring(F.lower(F.col(text)), 1, prefix)
@@ -514,15 +506,7 @@ def levenshtein_join(
         )
         .distinct()
     )
-    bag = F.array(
-        *[
-            (
-                F.col("_len")
-                - F.length(F.replace(F.col("_key"), F.lit(ch), F.lit("")))
-            ).cast("int")
-            for ch in _alphabet
-        ]
-    )
+    bag = _bag()
     bag_l1 = _bag_l1("_ba", "_bb")
     return (
         pairs.join(

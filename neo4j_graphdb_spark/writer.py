@@ -513,6 +513,14 @@ class _Rewrite:
         """Bucket of one of this value's rows in the next version."""
         return _hash_bucket(self.n, *[F.col(c) for c in self.key_cols])
 
+    def buckets_of(self, rows: DataFrame) -> list[int]:
+        """Bucket ids of ``rows`` (which carry BUCKET_COL). A one-bucket
+        value answers ``[0]`` without a Spark job — also for zero rows,
+        whose rewrite of that leaf then carries its rows unchanged."""
+        if self.n == 1:
+            return [0]
+        return [r[BUCKET_COL] for r in rows.select(BUCKET_COL).distinct().collect()]
+
     def touched(self, existing: DataFrame, buckets: list[int]) -> DataFrame:
         """The current rows the write replaces: this value's rows in
         ``buckets`` (all of them when the count grew)."""
@@ -754,8 +762,8 @@ class GraphStore:
 
         existing = self._nodes.read(self.spark)
         plan = self._node_rewrite(label, existing)
-        # lazy checkpoint: the deduped batch is materialized ONCE (by the
-        # bucket-list collect) and reused by the merge join and the write,
+        # lazy checkpoint: the deduped batch is materialized ONCE (by its
+        # first action) and reused by the merge join and the write,
         # instead of re-running the dedup window per action; blocks are
         # reclaimed by the ContextCleaner when the merge returns
         incoming = incoming.withColumn(BUCKET_COL, plan.bucket()).localCheckpoint(
@@ -799,9 +807,7 @@ class GraphStore:
         # dirs. The bucket list is driver-side metadata, bounded by the
         # label's bucket count. A write that grows the count rewrites the
         # whole label instead (plan.whole).
-        buckets = [
-            r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(incoming)
         touched = plan.touched(existing, buckets)
         all_props = sorted(
             (set(touched.columns) | set(incoming.columns))
@@ -1084,9 +1090,7 @@ class GraphStore:
         # same file-pruned discipline as merge_nodes: an existing copy of
         # edge (s,d) can only live in the bucket of (s,d), so the join,
         # union, and rewrite touch only this rel_type's touched buckets
-        buckets = [
-            r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(incoming)
         touched = plan.touched(existing, buckets)
         edge_key = ["src", "dst", "rel_type"]
         all_props = sorted(
@@ -1278,10 +1282,7 @@ class GraphStore:
             plan.write(created_rows, None, [])
             created_rows.unpersist()
             return WriteSummary(nodes_created=created, properties_set=props_set)
-        buckets = [
-            r[BUCKET_COL]
-            for r in created_rows.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(created_rows)
         touched = plan.touched(existing, buckets)
         all_props = sorted(
             (set(touched.columns) | set(created_rows.columns))
@@ -1344,9 +1345,7 @@ class GraphStore:
             return WriteSummary(
                 relationships_created=created, properties_set=props_set
             )
-        buckets = [
-            r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(incoming)
         touched = plan.touched(existing, buckets)
         edge_key = ["src", "dst", "rel_type"]
         all_props = sorted(
@@ -1441,9 +1440,7 @@ class GraphStore:
             return WriteSummary()
         plan = self._edge_rewrite(rel_type, existing, grow=False)
         doomed = doomed.withColumn(BUCKET_COL, plan.bucket()).persist()
-        buckets = [
-            r[BUCKET_COL] for r in doomed.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(doomed)
         touched = plan.touched(existing, buckets).persist()
         join_cols = ["src", "dst", "rel_type"] + [
             c for c in prop_map if c in existing.columns
@@ -1568,9 +1565,7 @@ class GraphStore:
                     )
             incident.unpersist()
 
-        doomed_buckets = [
-            r[BUCKET_COL] for r in doomed.select(BUCKET_COL).distinct().collect()
-        ]
+        doomed_buckets = plan.buckets_of(doomed)
         touched = plan.touched(existing, doomed_buckets)
         kept = touched.join(
             doomed.select(NODE_ID), on=NODE_ID, how="left_anti"
@@ -1618,9 +1613,7 @@ class GraphStore:
             .distinct()
             .persist()
         )
-        buckets = [
-            r[BUCKET_COL] for r in target.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(target)
         touched = plan.touched(existing, buckets)
         flagged = touched.join(
             target.select(NODE_ID).withColumn("_hit", F.lit(True)),
@@ -1690,9 +1683,7 @@ class GraphStore:
             .withColumn(BUCKET_COL, plan.bucket())
             .persist()
         )
-        buckets = [
-            r[BUCKET_COL] for r in target.select(BUCKET_COL).distinct().collect()
-        ]
+        buckets = plan.buckets_of(target)
         touched = plan.touched(existing, buckets)
         flagged = touched.join(
             target.select("src", "dst").withColumn("_hit", F.lit(True)),

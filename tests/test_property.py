@@ -7,6 +7,7 @@ Spark jobs, so the budget goes to input diversity, not volume.
 
 import hashlib
 import os
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -420,6 +421,110 @@ def test_landmark_closeness_matches_python_bfs(spark, edges, k):
                 n, hsum = exp.get(v, (0, 0))
                 exp[v] = (n + 1, hsum + 12 // d)
     assert got == exp
+
+
+@st.composite
+def small_weighted_digraphs(draw):
+    """A digraph on string ids with a chain through ``m`` nodes (so a
+    small round cap falls below the diameter), extra random edges (cycles
+    and self-loops allowed), weights that include 0, and a source set."""
+    n = draw(st.integers(3, 6))
+    ids = [f"v{i}" for i in draw(st.permutations(range(n)))]
+    m = draw(st.integers(3, n))
+    weight = st.sampled_from([0.0, 0.5, 1.0, 2.0, 3.25])
+    edges = {(a, b): draw(weight) for a, b in zip(ids[: m - 1], ids[1:m])}
+    for _ in range(draw(st.integers(0, 6))):
+        edges[(draw(st.sampled_from(ids)), draw(st.sampled_from(ids)))] = draw(weight)
+    sources = sorted(draw(st.sets(st.sampled_from(ids), min_size=1, max_size=2)))
+    return ids, sorted((a, b, w) for (a, b), w in edges.items()), sources
+
+
+@given(small_weighted_digraphs(), st.integers(1, 3))
+@settings(**_SETTINGS)
+def test_min_relaxation_loops_match_round_capped_references(spark, graph, cap):
+    """Every BFS, Bellman-Ford and flooding loop equals its pure-Python
+    reference run for exactly ``cap`` synchronous rounds: BFS levels,
+    pairwise BFS whose seed is not known (a source re-reached through a
+    cycle reports the cycle length), k-round Bellman-Ford, and min-id
+    flooding over string ids."""
+    from neo4j_graphdb_spark.graph.algorithms import (
+        _landmark_distances,
+        connected_components,
+        pairwise_shortest_paths,
+        shortest_paths,
+        weighted_shortest_paths,
+        weighted_sssp,
+    )
+
+    ids, edges, sources = graph
+    edf = spark.createDataFrame(edges, "src string, dst string, weight double")
+    sdf = spark.createDataFrame([(s,) for s in sources], "id string")
+    adj: dict = {}
+    for a, b, _ in edges:
+        adj.setdefault(a, set()).add(b)
+
+    def bfs(seeds, known):
+        dist, frontier = dict(known), list(seeds)
+        for h in range(1, cap + 1):
+            frontier = sorted({b for a in frontier for b in adj.get(a, ())} - set(dist))
+            dist.update((v, h) for v in frontier)
+        return dist
+
+    def bellman_ford(seeds):
+        dist = {s: 0.0 for s in seeds}
+        for _ in range(cap):
+            nxt = dict(dist)
+            for a, b, w in edges:
+                if a in dist and dist[a] + w < nxt.get(b, float("inf")):
+                    nxt[b] = dist[a] + w
+            dist = nxt
+        return dist
+
+    k = 2
+    nodes = spark.createDataFrame([(i,) for i in ids], "node_id string")
+    runs = {
+        "bfs": lambda: shortest_paths(edf, sdf, max_hops=cap),
+        "landmarks": lambda: _landmark_distances(edf, k, cap),
+        "pairwise": lambda: pairwise_shortest_paths(edf, sdf, max_rounds=cap),
+        "bellman_ford": lambda: weighted_shortest_paths(edf, sdf, max_iter=cap),
+        "sssp": lambda: weighted_sssp(edf, sdf, max_rounds=cap),
+        "flooding": lambda: connected_components(
+            nodes, edf, max_iter=cap, algorithm="min_propagation"
+        ),
+    }
+    # the six driver loops are independent: submitting them from threads
+    # overlaps their small Spark jobs on the local cores
+    with ThreadPoolExecutor(len(runs)) as pool:
+        rows = dict(zip(runs, pool.map(lambda f: f().collect(), runs.values())))
+
+    assert {r["id"]: r["dist"] for r in rows["bfs"]} == bfs(
+        sources, {s: 0 for s in sources}
+    )
+
+    on_edges = sorted({x for a, b, _ in edges for x in (a, b)})
+    lms = sorted(on_edges, key=lambda x: (hashlib.md5(x.encode()).hexdigest(), x))[:k]
+    assert {(r["lm"], r["id"]): r["dist"] for r in rows["landmarks"]} == {
+        (lm, v): d for lm in lms for v, d in bfs([lm], {lm: 0}).items()
+    }
+
+    assert {(r["source"], r["id"]): r["hops"] for r in rows["pairwise"]} == {
+        (s, v): d for s in sources for v, d in bfs([s], {}).items()
+    }
+
+    assert {r["id"]: r["dist"] for r in rows["bellman_ford"]} == bellman_ford(sources)
+
+    assert {(r["source"], r["id"]): r["dist"] for r in rows["sssp"]} == {
+        (s, v): d for s in sources for v, d in bellman_ford([s]).items()
+    }
+
+    label = {v: v for v in ids}
+    for _ in range(cap):
+        nxt = dict(label)
+        for a, b, _w in edges:
+            nxt[b] = min(nxt[b], label[a])
+            nxt[a] = min(nxt[a], label[b])
+        label = nxt
+    assert {r["id"]: r["comp"] for r in rows["flooding"]} == label
 
 
 def _py_shingles(text: str, n: int) -> set:

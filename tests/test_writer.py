@@ -413,11 +413,19 @@ def test_delete_only_rewrites_touched_label_partition(spark, store):
     )
     v_after = store._nodes.current_path()
     assert v_after != v_before
-    # untouched Publisher partition carried over as hardlinks (same inode)
+    # untouched Publisher partition carried over as hardlinks (same inode);
+    # its leaves sit in _kb=N/ dirs, so walk the tree
     def inodes(vdir, part):
         d = os.path.join(vdir, part)
-        return {f: os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d) if f.endswith(".parquet")}
-    assert inodes(v_after, "label=Publisher") == inodes(v_before, "label=Publisher")
+        return {
+            os.path.relpath(os.path.join(dp, fn), d): os.stat(os.path.join(dp, fn)).st_ino
+            for dp, _, fns in os.walk(d)
+            for fn in fns
+            if fn.endswith(".parquet")
+        }
+    before = inodes(v_before, "label=Publisher")
+    assert before
+    assert inodes(v_after, "label=Publisher") == before
 
 
 def test_delete_emptying_only_label_leaves_readable_store(spark, tmp_path):
